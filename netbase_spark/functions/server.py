@@ -21,7 +21,9 @@ serving layer reads MATERIALIZED tables:
 - ``/count`` introspection numbers are computed once at startup;
 - ad-hoc console lines (``/q/...``) DO run through the live Console —
   that is the interactive surface, explicitly not the hot path, and it
-  shares the one SparkSession (threaded handler, no forking).
+  shares the one SparkSession (threaded handler, no forking).  The
+  surface is read-only: commands that change the served table or touch
+  server-side paths (:data:`WRITE_COMMANDS`) are answered with 403.
 
 Formats: a ``json`` / ``csv`` / ``txt`` path prefix selects the
 response rendering (webserver.cpp's format prefixes); default json.
@@ -49,6 +51,15 @@ from urllib.parse import parse_qs, unquote, urlparse
 from pyspark.sql import DataFrame
 
 _FORMATS = ("json", "csv", "txt")
+
+# Console commands an unauthenticated GET must not run: they rewrite the
+# served triple table (learn/update/delete/merge/ci/label) or read/write
+# server-side paths (save/load/import/export).
+WRITE_COMMANDS = frozenset({
+    ":learn", ":update", ":delete", ":d", ":merge", ":ci", ":label",
+    ":abstract", ":save", ":s", ":w", ":load", ":l", ":import", ":i",
+    ":export", ":e",
+})
 
 
 def _render(rows: list[dict], fmt: str) -> tuple[bytes, str]:
@@ -143,6 +154,9 @@ class KgHttpServer:
                     )
             return 200, rows, fmt
         if head == "q":
+            cmd = rest.strip().partition(" ")[0].lower()
+            if cmd in WRITE_COMMANDS:
+                return 403, [{"error": f"{cmd} is not allowed over HTTP"}], fmt
             df = self.console.execute(rest)
             if df is None:
                 return 200, [], fmt

@@ -22,7 +22,7 @@ from netbase_spark.relations import MENTIONED_IN
 def alias_canonical_map(aliases: DataFrame, mapping: DataFrame) -> dict[str, str]:
     """Compose rank-1 alias->entity selection (``best_entity_per_alias``)
     with the union-find canonical map into ONE driver dict, ready for
-    ``sc.broadcast`` into the fused scan (``scan_mention_triples``).
+    ``sc.broadcast`` into the fused scan (``prepare_triple_scan``).
 
     Both inputs are label-side dimensions (gazetteer-bounded, never
     corpus-bounded), so the collect is the same memory class as the
@@ -44,7 +44,7 @@ def alias_entity_table(aliases: DataFrame, mapping: DataFrame) -> DataFrame:
     Returns (alias_key, entity), one row per surface form.  This is the
     scale path: when the gazetteer exceeds the broadcast cap
     (plans/broadcast_gate), the fused scan joins THIS table instead of
-    collecting a dict (operators/mentions.scan_mention_triples_gated).
+    collecting a dict (operators/mentions.prepare_construction_scan).
     The union-find mapping is merge-edge-bounded (far smaller than the
     alias table), so IT still broadcasts."""
     best = best_entity_per_alias(aliases).select("name_norm", "key")

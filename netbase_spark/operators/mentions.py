@@ -9,35 +9,35 @@ concat of kind='text' spans) happens JVM-side with array functions so
 only the final string crosses into Arrow.  The per-batch scan uses the
 same rule module as the oracle (single source of truth for semantics).
 
-The gazetteer travels as a ``sc.broadcast`` of (alias structure,
-first-token index): serialized ONCE per executor via the block manager,
-NOT per task closure.  Round 1 embedded the alias map in the UDF
-closure — at the 10^7-10^8-alias WikiData target that re-serializes a
-multi-GB closure with every task and OOMs the driver;
+The gazetteer travels as a ``sc.broadcast`` of (alias structure, token
+trie): serialized ONCE per executor via the block manager, NOT per task
+closure.  Round 1 embedded the alias map in the UDF closure — at the
+10^7-10^8-alias WikiData target that re-serializes a multi-GB closure
+with every task and OOMs the driver;
 tests/test_pipeline_pr.py::test_scan_closure_stays_small_at_100k_aliases
-pins the fix.  Two interchangeable probe structures fill the automaton
-role (``automaton=`` on every scan entry point, both property-tested
-equal to the naive transcription):
+pins the fix.
 
-- ``"trie"`` (default): a token-level goto trie — the Aho-Corasick
-  goto function for this window grammar.  Anchored starts + the
-  MAX_WORDS cap make failure links useless (a per-start walk of depth
-  <= 6 IS the automaton); what the trie buys is O(1) transition per
-  safe-word extension and early termination on dead prefixes.
-  Measured 1.3-1.5x the hash probe's scan throughput and ~0.73x its
-  broadcast size at 10^5-10^7 aliases
-  (scripts/probe_gazetteer_scale.py -> BENCH/gazetteer_scale_probe.json).
-- ``"probe"``: O(1) hash-set per window (the direct analog of the
-  reference's wordhash index) with first-token + prefix2 pruning.
+The token-level goto trie (rules.build_token_trie / find_mentions_trie)
+is the only broadcast automaton — the Aho-Corasick goto function for
+this window grammar.  Anchored starts + the MAX_WORDS cap make failure
+links useless (a per-start walk of depth <= 6 IS the automaton); what
+the trie buys is O(1) transition per safe-word extension and early
+termination on dead prefixes.  It measured 1.3-1.5x the scan throughput
+of the hash-probe structure it replaced and ~0.73x its broadcast size
+at 10^5-10^7 aliases (BENCH/gazetteer_scale_probe.json).  A full AC
+automaton over raw token streams would change semantics — span-level
+normalization can merge/collapse tokens, so matching stays span-keyed.
 
-A full AC automaton over raw token streams would change semantics —
-span-level normalization can merge/collapse tokens, so matching stays
-span-keyed in both modes.
+Construction scans go through one gate: :func:`prepare_construction_scan`
+chooses between the broadcast trie and the shuffle-join fallback (below)
+and :func:`run_construction_scan` runs the prepared choice on a batch of
+documents.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -67,72 +67,32 @@ def doc_text(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", txt.alias("text"))
 
 
-def _broadcast_gazetteer(spark, alias_struct, blacklist, automaton: str = "trie"):
-    """One broadcast per scan.  ``automaton`` picks the probe structure:
-
-    - ``"trie"`` (default): token-level goto trie
-      (rules.build_token_trie) — O(1) state transition per safe-word
-      extension plus early termination on dead prefixes; measured 1.3-
-      1.5x the probe's scan throughput AND ~0.73x its broadcast bytes
-      at 10^5-10^7 aliases (BENCH/gazetteer_scale_probe.json, runnable
-      via scripts/probe_gazetteer_scale.py).  This is the
-      Aho-Corasick goto function for this window grammar: starts are
-      anchored and windows capped at MAX_WORDS, so failure links buy
-      nothing over a per-start walk (see rules.py trie section).
-    - ``"probe"``: O(1) hash-set window probe with first-token/prefix2
-      pruning — the round-1/2 structure, kept as the benchmark twin.
-
-    Both are property-tested equal to find_mentions_naive.  The
-    structures are built on the driver so every executor deserializes
-    the finished arrays.  For dict alias_structs (the fused triple
-    scan) the alias->entity map rides along in either mode."""
-    from netbase_spark.oracle.rules import (
-        build_token_trie,
-        first_token_index,
-        max_alias_word_count,
-        prefix2_index,
-    )
+def _broadcast_gazetteer(spark, alias_struct, blacklist):
+    """One broadcast per scan: (alias_struct, token trie, blacklist,
+    max alias word count).  The trie is built on the driver so every
+    executor deserializes the finished dicts.  For dict alias_structs
+    (the fused triple scan) the alias->entity map rides along."""
+    from netbase_spark.oracle.rules import build_token_trie, max_alias_word_count
 
     keys = alias_struct.keys() if isinstance(alias_struct, dict) else alias_struct
-    maxw = max_alias_word_count(keys)
-    bl = frozenset(blacklist)
-    if automaton == "trie":
-        payload = ("trie", alias_struct, build_token_trie(keys), bl, maxw)
-    elif automaton == "probe":
-        payload = (
-            "probe",
-            alias_struct,
-            first_token_index(keys),
-            bl,
-            maxw,
-            prefix2_index(keys),
-        )
-    else:
-        raise ValueError(f"unknown automaton {automaton!r}")
+    payload = (
+        alias_struct,
+        build_token_trie(keys),
+        frozenset(blacklist),
+        max_alias_word_count(keys),
+    )
     return spark.sparkContext.broadcast(payload)
 
 
 def _scan_candidates(text, payload, german):
-    """Run the broadcast payload's automaton over one text; returns the
+    """Run the broadcast trie over one text; returns the
     longest-match-filtered candidate list."""
-    from netbase_spark.oracle.rules import (
-        filter_candidates,
-        find_mentions,
-        find_mentions_trie,
-    )
+    from netbase_spark.oracle.rules import filter_candidates, find_mentions_trie
 
-    if payload[0] == "trie":
-        _, _struct, trie, bl, maxw = payload
-        cands = find_mentions_trie(
-            text or "", trie, bl, german, max_span_words=maxw
-        )
-    else:
-        _, struct, ftoks, bl, maxw, pfx2 = payload
-        cands = find_mentions(
-            text or "", struct, bl, german,
-            first_tokens=ftoks, max_span_words=maxw, prefix2=pfx2,
-        )
-    return filter_candidates(cands)
+    _struct, trie, bl, maxw = payload
+    return filter_candidates(
+        find_mentions_trie(text or "", trie, bl, german, max_span_words=maxw)
+    )
 
 
 def _make_mention_scan(bc, german: bool, distinct_per_doc: bool):
@@ -176,28 +136,12 @@ def _make_mention_scan(bc, german: bool, distinct_per_doc: bool):
     return scan
 
 
-def detect_mentions(
-    docs: DataFrame,
-    alias_names: list[str],
-    blacklist: set[str],
-    german: bool = False,
-    distinct_per_doc: bool = False,
-    automaton: str = "trie",
-) -> DataFrame:
-    """docs(doc_id, spans) -> mentions(doc_id, alias_key, start_word, n_words)."""
-    return detect_mentions_text(
-        doc_text(docs), alias_names, blacklist, german, distinct_per_doc,
-        automaton,
-    )
-
-
 def detect_mentions_text(
     texts: DataFrame,
     alias_names: list[str],
     blacklist: set[str],
     german: bool = False,
     distinct_per_doc: bool = False,
-    automaton: str = "trie",
 ) -> DataFrame:
     """texts(doc_id, text) -> mentions(doc_id, alias_key, start_word, n_words).
 
@@ -210,9 +154,7 @@ def detect_mentions_text(
     only shuffle on the doc side (a doc's mentions all live in its own
     scan batch, so per-doc dedup IS global dedup).
     """
-    bc = _broadcast_gazetteer(
-        texts.sparkSession, frozenset(alias_names), blacklist, automaton
-    )
+    bc = _broadcast_gazetteer(texts.sparkSession, frozenset(alias_names), blacklist)
     scan = _make_mention_scan(bc, german, distinct_per_doc)
     return texts.select(
         F.col("doc_id").cast("string").alias("doc_id"), "text"
@@ -228,7 +170,7 @@ def _make_triple_scan(bc, german: bool = False):
 
     def scan(batches):
         payload = bc.value
-        amap = payload[1]  # alias -> final-entity map rides the payload
+        amap = payload[0]  # alias -> final-entity map rides the payload
         for pdf in batches:
             out_s, out_o = [], []
             for doc_id, text in zip(
@@ -262,12 +204,11 @@ def prepare_triple_scan(
     spark,
     alias_to_entity: dict[str, str],
     blacklist: set[str],
-    automaton: str = "trie",
 ):
     """Build the fused-scan gazetteer broadcast ONCE and return the
     handle for reuse across :func:`scan_mention_triples_prepared` calls.
 
-    Building the automaton (trie over every surface form) and shipping
+    Building the trie over every surface form and shipping
     the broadcast is O(gazetteer) work — trivial at fixture scale but
     minutes of driver CPU + multi-GB of broadcast traffic at the
     WikiData north-star (10^7-10^8 aliases).  A deployment constructs
@@ -276,25 +217,25 @@ def prepare_triple_scan(
     src/init.cpp:362, and scans any number of queries against it);
     re-broadcasting per batch would dominate micro-batch latency, so
     the prepared handle is the batch-loop API."""
-    return _broadcast_gazetteer(spark, dict(alias_to_entity), blacklist, automaton)
+    return _broadcast_gazetteer(spark, dict(alias_to_entity), blacklist)
 
 
 def remap_scan_entities(spark, bc, rep_of: dict[str, str]):
     """Refresh a :func:`prepare_triple_scan` broadcast after a canonical-
     map delta: alias -> entity values route through ``rep_of`` (old rep
-    -> new rep); aliases whose entity is untouched keep it.  The
-    automaton structure (trie / probe indexes) is REUSED — the alias key
-    set is unchanged, and rebuilding it is the O(gazetteer) driver cost
-    the incremental loop exists to avoid (minutes at 10^7-10^8 aliases,
-    BENCH/gazetteer_scale_probe.json).  The old broadcast is released.
-    Reference semantics: ``mergeNode`` rewrites ids in place and later
-    lookups see the merged node (src/netbase.cpp:2610-2638)."""
+    -> new rep); aliases whose entity is untouched keep it.  The token
+    trie is REUSED — the alias key set is unchanged, and rebuilding it
+    is the O(gazetteer) driver cost the incremental loop exists to avoid
+    (minutes at 10^7-10^8 aliases, BENCH/gazetteer_scale_probe.json).
+    The old broadcast is released.  Reference semantics: ``mergeNode``
+    rewrites ids in place and later lookups see the merged node
+    (src/netbase.cpp:2610-2638)."""
     payload = bc.value
-    amap = payload[1]
+    amap = payload[0]
     if not isinstance(amap, dict):
         raise ValueError("broadcast does not carry an alias->entity map")
     new_map = {k: rep_of.get(v, v) for k, v in amap.items()}
-    new_payload = (payload[0], new_map) + tuple(payload[2:])
+    new_payload = (new_map,) + tuple(payload[1:])
     out = spark.sparkContext.broadcast(new_payload)
     bc.unpersist()
     return out
@@ -303,9 +244,14 @@ def remap_scan_entities(spark, bc, rep_of: dict[str, str]):
 def scan_mention_triples_prepared(
     docs: DataFrame, bc, german: bool = False
 ) -> DataFrame:
-    """Fused scan against a :func:`prepare_triple_scan` handle — the
-    per-batch half of the split: one mapInPandas over doc partitions,
-    zero doc-side joins/shuffles, no driver work besides plan assembly."""
+    """Fused scan -> link -> canonicalize against a
+    :func:`prepare_triple_scan` handle, whose map sends each surface
+    form to its FINAL entity (rank-1 prior composed with the union-find
+    canonical map — both label-side-only, so they exist before any
+    document is read).  Emits canonical mention triples (subj=entity,
+    rel=MENTIONED_IN, obj=doc_id, rule, doc_id), deduped per doc on the
+    final entity.  One mapInPandas over doc partitions: zero doc-side
+    joins/shuffles, no driver work besides plan assembly."""
     from netbase_spark.schemas import TRIPLES_SCHEMA
 
     scan = _make_triple_scan(bc, german)
@@ -314,33 +260,6 @@ def scan_mention_triples_prepared(
         .select(F.col("doc_id").cast("string").alias("doc_id"), "text")
         .mapInPandas(scan, schema=TRIPLES_SCHEMA)
     )
-
-
-def scan_mention_triples(
-    docs: DataFrame,
-    alias_to_entity: dict[str, str],
-    blacklist: set[str],
-    german: bool = False,
-    automaton: str = "trie",
-) -> DataFrame:
-    """Fused scan -> link -> canonicalize for the construction hot path:
-    ``alias_to_entity`` maps each gazetteer surface form to its FINAL
-    entity (rank-1 prior selection composed with the union-find
-    canonical map — both label-side-only computations, so they exist
-    before any document is read).  Emits canonical mention triples
-    (subj=entity, rel=MENTIONED_IN, obj=doc_id, rule, doc_id), deduped
-    per doc on the final entity.
-
-    Equivalent to detect_mentions + link_mentions + rewrite on the
-    mention side (mention triples are per-doc-unique by construction:
-    obj is the doc id), but the doc side needs NO join and NO shuffle —
-    one mapInPandas over doc partitions, the gazetteer rides a single
-    ``sc.broadcast``.
-    """
-    bc = prepare_triple_scan(
-        docs.sparkSession, alias_to_entity, blacklist, automaton
-    )
-    return scan_mention_triples_prepared(docs, bc, german)
 
 
 # --- shuffle-join fallback (gazetteer too large to broadcast) ---------------
@@ -361,7 +280,7 @@ def scan_mention_triples(
 # Cost: one corpus-sized shuffle (probes) + one doc_id shuffle
 # (resolution) that the broadcast path avoids — the price of an unbounded
 # gazetteer.  Both paths are property-tested identical
-# (tests/test_mention_shuffle.py); scan_mention_triples_gated picks per
+# (tests/test_mention_shuffle.py); prepare_construction_scan picks per
 # input size via plans.broadcast_gate.
 
 _PROBE_SCHEMA = (
@@ -597,14 +516,14 @@ def scan_mention_triples_shuffle(
     german: bool = False,
     ft_bc="auto",
 ) -> DataFrame:
-    """Shuffle-join twin of :func:`scan_mention_triples`:
+    """Shuffle-join twin of :func:`scan_mention_triples_prepared`:
     ``alias_entity`` is a DataFrame (alias_key, entity) — the rank-1 x
     canonical composition of :func:`~netbase_spark.operators.linking.
     alias_entity_table` — joined instead of driver-collected.  Identical
     triples (property-tested).  ``ft_bc`` as in
-    :func:`detect_mentions_shuffle` — streaming/batch loops should pass
-    a prepared :func:`first_token_hash_filter` handle so the filter
-    build (two dimension jobs) is paid once, not per batch."""
+    :func:`detect_mentions_shuffle`; :func:`prepare_construction_scan`
+    builds one handle per gazetteer so the filter build (two dimension
+    jobs) is paid once, not per batch."""
     from netbase_spark.schemas import TRIPLES_SCHEMA
 
     bl = frozenset(blacklist)
@@ -646,57 +565,66 @@ def scan_mention_triples_shuffle(
     return _per_doc_stream(hits, resolve_batch, TRIPLES_SCHEMA)
 
 
-def detect_mentions_gated(
-    texts: DataFrame,
-    aliases: DataFrame,
-    blacklist: set[str],
-    german: bool = False,
-    distinct_per_doc: bool = False,
-    alias_col: str = "alias_key",
-    cap_bytes: int | None = None,
-    automaton: str = "trie",
-) -> DataFrame:
-    """Size-gated mention detection: collect-and-broadcast the alias
-    column when it fits (:func:`detect_mentions_text`), shuffle-join
-    above the cap (:func:`detect_mentions_shuffle`).  The one-job
-    CollectLimit probe bounds driver memory by the cap itself, so an
-    oversized gazetteer never fully reaches the driver."""
-    from netbase_spark.plans.broadcast_gate import collect_under_cap
-
-    keys = aliases.select(F.col(alias_col)).distinct()
-    rows = collect_under_cap(keys, cap_bytes)
-    if rows is not None:
-        return detect_mentions_text(
-            texts, [r[0] for r in rows], blacklist, german, distinct_per_doc,
-            automaton,
-        )
-    return detect_mentions_shuffle(
-        texts, aliases, blacklist, german, distinct_per_doc, alias_col
-    )
+# --- the construction-scan gate ---------------------------------------------
 
 
-def scan_mention_triples_gated(
-    docs: DataFrame,
+class PreparedScan(NamedTuple):
+    """A construction scan prepared once per gazetteer: exactly one of
+    ``scan_bc`` (a :func:`prepare_triple_scan` broadcast) and
+    ``alias_entity`` (the checkpointed alias->entity table, with its
+    :func:`first_token_hash_filter` in ``ft_bc``) is set.
+    ``ConstructionArtifacts`` carries the same four fields, so
+    :func:`run_construction_scan` accepts either."""
+
+    scan_bc: object
+    alias_entity: DataFrame | None
+    blacklist: frozenset
+    ft_bc: object = None
+
+
+def prepare_construction_scan(
     aliases: DataFrame,
     mapping: DataFrame,
     blacklist: set[str],
-    german: bool = False,
     cap_bytes: int | None = None,
-) -> DataFrame:
-    """Size-gated construction scan: collect-and-broadcast the composed
-    alias->entity map when it fits (:func:`scan_mention_triples` — zero
-    doc-side shuffles), fall back to the shuffle join above it.  The
-    gate is a ONE-job CollectLimit probe (plans/broadcast_gate.
-    collect_under_cap): the happy path executes the dimension lineage
-    exactly once — a fits-then-collect gate measured ~0.7 s of pure
-    re-execution overhead per construction — and the oversized case
-    never materializes more than the cap's worth of rows."""
+) -> PreparedScan:
+    """The one broadcast-vs-shuffle decision for construction scans.
+
+    Composes alias -> rank-1 entity -> canonical rep
+    (:func:`~netbase_spark.operators.linking.alias_entity_table`) and
+    collects it with the ONE-job CollectLimit probe
+    (plans/broadcast_gate.collect_under_cap): under the cap the rows
+    become a :func:`prepare_triple_scan` broadcast — the dimension
+    lineage runs exactly once, where a fits-then-collect gate measured
+    ~0.7 s of re-execution per construction.  Above it the table stays
+    distributed: checkpointed so per-batch scans don't re-run the
+    dimension lineage, plus a first-token probe pre-filter built once
+    for every batch's shuffle scan to reuse."""
     from netbase_spark.operators.linking import alias_entity_table
     from netbase_spark.plans.broadcast_gate import collect_under_cap
 
+    bl = frozenset(blacklist)
     ae = alias_entity_table(aliases, mapping)
     rows = collect_under_cap(ae, cap_bytes)
     if rows is not None:
         amap = {r["alias_key"]: r["entity"] for r in rows}
-        return scan_mention_triples(docs, amap, blacklist, german)
-    return scan_mention_triples_shuffle(docs, ae, blacklist, german)
+        bc = prepare_triple_scan(aliases.sparkSession, amap, bl)
+        return PreparedScan(bc, None, bl)
+    ae = ae.localCheckpoint()
+    return PreparedScan(None, ae, bl, first_token_hash_filter(ae, "alias_key"))
+
+
+def run_construction_scan(
+    docs: DataFrame, prepared, german: bool = False
+) -> DataFrame:
+    """Canonical mention triples for one docs batch against a
+    :class:`PreparedScan` (or ``ConstructionArtifacts``): the broadcast
+    trie scan (no doc-side shuffle) or the probe-key shuffle join.
+    ``scan_mention_triples_prepared`` is looked up at call time, so a
+    wrapper installed on this module sees every construction scan."""
+    if prepared.scan_bc is not None:
+        return scan_mention_triples_prepared(docs, prepared.scan_bc, german)
+    return scan_mention_triples_shuffle(
+        docs, prepared.alias_entity, prepared.blacklist, german,
+        ft_bc=prepared.ft_bc,
+    )

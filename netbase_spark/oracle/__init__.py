@@ -2,6 +2,5 @@ from netbase_spark.oracle.rules import (  # noqa: F401
     dissect_name,
     dissect_parent,
     filter_candidates,
-    find_mentions,
     oracle_triples,
 )

@@ -286,7 +286,7 @@ def _norm_cached(s: str) -> str:
 # safe?, first normalized token, leading-number?).  All four are pure
 # functions of the raw word, so the cache changes nothing semantically;
 # word distributions are Zipfian, so hit rates are high.  "safe" means
-# normalization is compositional for this word (see find_mentions).
+# normalization is compositional for this word (see find_mentions_trie).
 _WORD_INFO: dict[str, tuple[str, bool, str, bool]] = {}
 _WORD_INFO_MAX = 1_000_000
 _EMPTY_INFO = ("", False, "", False)
@@ -308,51 +308,12 @@ def _word_info(w: str) -> tuple[str, bool, str, bool]:
 
 
 def max_alias_word_count(alias_names) -> int:
-    """Driver-side hint for :func:`find_mentions`: the max word count of
+    """Driver-side hint for :func:`find_mentions_trie`: the max word count of
     any alias.  A window whose NONEMPTY-normalizing token count exceeds
     this (+1 for the trailing-char stem retry, which can delete a
     1-char final token) can never match — its normalized form has at
     least that many words.  Pure pruning: never changes results."""
     return max((len(a.split(" ")) for a in alias_names if a), default=0)
-
-
-def first_token_index(alias_names) -> frozenset[str]:
-    """Prefilter set for :func:`find_mentions`: the first normalized
-    token of every alias (plus quote-stripped variants).  A window at
-    position ``i`` can only match some alias if the normalized first
-    word at ``i`` is in this set (single-word spans additionally via the
-    trailing-s/-e stem) — everything else skips the expensive per-span
-    normalization.  Pure optimization: may falsely PASS (the full probe
-    then rejects) but never falsely rejects."""
-    toks: set[str] = set()
-    for a in alias_names:
-        if not a:
-            continue
-        t = a.split(" ", 1)[0]
-        toks.add(t)
-        toks.add(t.strip("\"'"))
-    toks.discard("")
-    return frozenset(toks)
-
-
-def prefix2_index(alias_names) -> frozenset[tuple[str, str]]:
-    """Window-extension gate for :func:`find_mentions`: the first TWO
-    tokens of every multi-token alias.  A safe-run window whose
-    normalized form has >= 3 tokens (and every extension of it — tokens
-    are only appended, so its first two tokens are already fixed) can
-    only match some alias whose (tok0, tok1) is in this set: the stem
-    retries strip the last RAW char of the span, which for a >= 3-token
-    window touches only the last token (a 1-char last token collapses
-    entirely, leaving >= 2 tokens — covered by the 2-token aliases'
-    pairs being in the set).  Pure pruning: may falsely PASS but never
-    falsely rejects; the gate is not consulted for unsafe spans (their
-    token structure is not compositional)."""
-    pairs: set[tuple[str, str]] = set()
-    for a in alias_names:
-        if a and " " in a:
-            parts = a.split(" ", 2)
-            pairs.add((parts[0], parts[1]))
-    return frozenset(pairs)
 
 
 def find_mentions_naive(
@@ -367,8 +328,8 @@ def find_mentions_naive(
     normalization, trailing-s (German -e) stem retry on the RAW span,
     numbers hack, blacklist, reversed-bigram probe.  No caching, no
     prefilters, no pruning — this is the semantic ground truth.  The
-    engine's :func:`find_mentions` is an optimized twin proven equal by
-    property tests (tests/test_oracle_rules.py); :func:`oracle_triples`
+    engine's :func:`find_mentions_trie` is an optimized twin proven equal
+    by property tests (tests/test_oracle_rules.py); :func:`oracle_triples`
     uses THIS path so an optimization bug shows up as a P/R failure
     instead of being masked by shared code."""
     q = text.translate(_PUNCT)
@@ -403,173 +364,6 @@ def find_mentions_naive(
                     ename = f"{span} {words[i - 1]}"
                     if norm_name(ename) not in blacklist:
                         key2 = alias_lookup(norm_name(ename))
-                        if key2 is not None:
-                            found.append((key2, i - 1, j - i + 1))
-    return found
-
-
-def find_mentions(
-    text: str,
-    alias_lookup,
-    blacklist: set[str],
-    german: bool = False,
-    max_words: int = MAX_WORDS,
-    first_tokens: frozenset[str] | None = None,
-    max_span_words: int | None = None,
-    prefix2: frozenset[tuple[str, str]] | None = None,
-) -> list[tuple[str, int, int]]:
-    """Optimized twin of :func:`find_mentions_naive` (same results,
-    property-tested): memoized per-word info, incremental normalized
-    spans for "safe" words, span lengths from prefix sums, raw spans
-    built only on the rare hit/stem paths.
-
-    A word is SAFE when ``norm_name(w) == w.lower()`` and ``w.isascii()``
-    — then normalization is compositional: the norm of a span of safe
-    words is the space-join of the per-word norms (norm_name only strips
-    at span EDGES and only collapses separator runs, and a safe word
-    contains neither strippable edges nor separators), so the inner loop
-    extends the normalized span by one concat instead of re-normalizing
-    the whole span.  The ascii guard keeps ``str.lower`` a per-character
-    1:1 map (no final-sigma contextual casing), which the stem retry's
-    ``run[:-1]`` arithmetic relies on.
-
-    ``alias_lookup`` may be a callable (returns the key or None) or a
-    set/frozenset/dict CONTAINER of normalized alias names — the
-    container form lets the hot loop use a direct ``in`` test instead of
-    a Python-level call per probe (the engine's lookups are all
-    identity-on-membership, so the two forms are equivalent;
-    property-tested in tests/test_oracle_rules.py).
-
-    ``first_tokens`` (from :func:`first_token_index`) skips start
-    positions that cannot begin any alias; ``max_span_words`` (from
-    :func:`max_alias_word_count`) stops window growth past the longest
-    alias; ``prefix2`` (from :func:`prefix2_index`) aborts safe-run
-    window growth at the 3rd token when no alias starts with the run's
-    first two tokens — sound even across later unsafe extensions because
-    norm_name is char-local (quote-strip happens only at span EDGES and
-    separators only ever collapse, never vanish mid-span), so the first
-    two normalized tokens of the window are fixed once three safe tokens
-    exist.  All three are pure pruning: they may falsely PASS (the full
-    probe then rejects) but never falsely reject.
-    """
-    q = text.translate(_PUNCT)
-    words = q.split(" ")
-    found: list[tuple[str, int, int]] = []
-    n = len(words)
-    max_words = min(max_words, MAX_WORDS)
-    # per-word memoized facts: (norm, safe, first norm token, number?)
-    wi = _word_info
-    info = [wi(w) if w else _EMPTY_INFO for w in words]
-    if callable(alias_lookup):
-        look, cont = alias_lookup, None
-    else:
-        cont = alias_lookup
-        look = lambda nn, _c=cont: (  # noqa: E731 — slow-path fallback
-            nn if nn and nn in _c else None
-        )
-    maxsw1 = None if max_span_words is None else max_span_words + 1
-    for i in range(n):
-        w0 = words[i]
-        if not w0:
-            continue
-        nn0, _safe0, t0, num_i = info[i]
-        # empty-normalizing tokens (pure punctuation) fall through:
-        # the span's normalized form then starts at a LATER word
-        if first_tokens is not None and t0:
-            # The stem retry must mirror the real probe, which strips
-            # the last RAW char then normalizes (norm_name drops a
-            # now-trailing quote/apostrophe): "Tesla's" stems to
-            # "tesla'" -> "tesla".  Stripping only the normalized
-            # trailing 's' falsely rejected such tokens.
-            passes = t0 in first_tokens
-            if not passes and t0[-1] == "s":
-                st = t0[:-1]
-                passes = st in first_tokens or st.strip("\"'") in first_tokens
-            if not passes and german and t0[-1] == "e":
-                st = t0[:-1]
-                passes = st in first_tokens or st.strip("\"'") in first_tokens
-            if not passes:
-                continue
-        # the numbers hack tests the span's LEADING integer, which lives
-        # entirely inside words[i] (digits cannot cross the separator)
-        run: str | None = None  # incremental normalized span (safe path)
-        run_toks = 0
-        t1r = ""  # second token of the safe run (for the prefix2 gate)
-        all_safe = True
-        slen = -1  # span chars incl. separators (len(w)+1 per word, -1 once)
-        nct = 0  # nonempty-norm word count (for the word-count bound)
-        for j in range(i + 1, min(i + max_words, n + 1)):
-            w = words[j - 1]
-            slen += len(w) + 1
-            if w:
-                inf = info[j - 1]
-                if inf[0]:
-                    nct += 1
-                    if maxsw1 is not None and nct > maxsw1:
-                        break  # nonempty count only grows — prune the rest
-                if all_safe:
-                    if inf[1]:
-                        if run is None:
-                            run = inf[0]
-                            run_toks = 1
-                        else:
-                            if run_toks == 1:
-                                t1r = inf[0]
-                            run = run + " " + inf[0]
-                            run_toks += 1
-                            if (
-                                run_toks == 3
-                                and prefix2 is not None
-                                and (nn0, t1r) not in prefix2
-                            ):
-                                break  # no alias starts with these 2 tokens
-                    else:
-                        all_safe = False
-            if slen < MIN_CHARS:
-                break  # loop guard, not a skip — span length is monotonic
-            last = w[-1] if w else " "
-            if all_safe and run is not None:
-                if cont is not None:
-                    key = run if run in cont else None
-                else:
-                    key = look(run)
-                if key is None and (
-                    last == "s" or (german and last == "e")
-                ):  # stemming (2014-2018, 2019-2023)
-                    # span[:-1] drops the raw trailing char; a 1-char last
-                    # word leaves a separator that norm strips too, and a
-                    # safe word's INTERIOR quote can land on the new edge
-                    # ("Tesla's" -> "tesla'" -> "tesla"), so re-strip it
-                    stem = (run[:-1] if len(w) >= 2 else run[:-2]).rstrip("\"' ")
-                    if cont is not None:
-                        key = stem if stem and stem in cont else None
-                    else:
-                        key = look(stem)
-                span = None
-            else:
-                span = " ".join(words[i:j])
-                key = look(_norm_cached(span))
-                if key is None and last == "s":
-                    key = look(_norm_cached(span[:-1]))
-                if key is None and german and last == "e":
-                    key = look(_norm_cached(span[:-1]))
-            if key is not None and num_i:
-                key = None  # "no numbers hack" (2026) — only matters on a hit
-            if key is not None:
-                # direct-path keys are already normalized (run/stem are
-                # norm forms; norm is idempotent) — probe blacklist as-is
-                bl_key = key if cont is not None else _norm_cached(key)
-                if bl_key in blacklist:  # forbidden[wordhash] (2030)
-                    continue
-                found.append((key, i, j - i))
-                # reversed bigram probe "<span> <previous word>" (2036-2040)
-                if i > 0 and words[i - 1]:
-                    if span is None:
-                        span = " ".join(words[i:j])
-                    ename = f"{span} {words[i - 1]}"
-                    en = _norm_cached(ename)
-                    if en not in blacklist:
-                        key2 = look(en)
                         if key2 is not None:
                             found.append((key2, i - 1, j - i + 1))
     return found
@@ -633,10 +427,10 @@ def filter_candidates(cands: list[tuple[str, int, int]]) -> list[tuple[str, int,
 # walk of depth <= MAX_WORDS — what matters is (a) O(1) state
 # transition per extension instead of re-hashing the whole growing
 # span, and (b) EARLY TERMINATION the moment the consumed safe tokens
-# stop being a prefix of any alias (the hash-set probe only had the
-# 2-token prefix2 gate).  ``build_token_trie`` builds the goto trie as
-# two flat dicts (pickle-cheap, one sc.broadcast); ``find_mentions_trie``
-# is the probe twin, property-tested equal to find_mentions_naive.
+# stop being a prefix of any alias.  ``build_token_trie`` builds the goto
+# trie as two flat dicts (pickle-cheap, one sc.broadcast);
+# ``find_mentions_trie`` is the engine's scan, property-tested equal to
+# find_mentions_naive.
 
 
 def build_token_trie(alias_names):
@@ -686,17 +480,28 @@ def find_mentions_trie(
     max_words: int = MAX_WORDS,
     max_span_words: int | None = None,
 ) -> list[tuple[str, int, int]]:
-    """Trie-walk twin of :func:`find_mentions` (same results,
-    property-tested vs :func:`find_mentions_naive`): safe-word runs
-    advance a goto-trie state per token (no span re-hash), and the
-    window loop BREAKS as soon as the consumed safe tokens are not a
-    prefix of any alias — sound because safe tokens are stable under
-    span-level normalization (no edge quotes, char-1:1 lowering) and
-    later words only APPEND tokens while the stem retry only modifies
-    the final token, so a broken prefix can never heal.  Stem retries
-    and unsafe/bigram probes fall back to a rooted O(<=6-token) walk
-    (:func:`_trie_has`) on the same normalized strings the hash-set
-    path probes."""
+    """Optimized twin of :func:`find_mentions_naive` (same results,
+    property-tested): memoized per-word info, span lengths from prefix
+    sums, raw spans built only on the rare hit/stem/unsafe paths.
+
+    A word is SAFE when ``norm_name(w) == w.lower()`` and ``w.isascii()``
+    — then normalization is compositional: the norm of a span of safe
+    words is the space-join of the per-word norms (norm_name only strips
+    at span EDGES and only collapses separator runs, and a safe word
+    contains neither strippable edges nor separators).  The ascii guard
+    keeps ``str.lower`` a per-character 1:1 map (no final-sigma
+    contextual casing), which the stem retry's ``run[:-1]`` arithmetic
+    relies on.
+
+    Safe-word runs advance a goto-trie state per token (no span
+    re-hash), and the window loop BREAKS as soon as the consumed safe
+    tokens are not a prefix of any alias — sound because later words
+    only APPEND tokens while the stem retry only modifies the final
+    token, so a broken prefix can never heal.  Stem retries and
+    unsafe/bigram probes fall back to a rooted O(<=6-token) walk
+    (:func:`_trie_has`) on the normalized span.  ``max_span_words``
+    (from :func:`max_alias_word_count`) stops window growth past the
+    longest alias — pure pruning, never changes results."""
     children, term = trie
     get = children.get
     q = text.translate(_PUNCT)
@@ -800,7 +605,7 @@ def enumerate_probe_keys(
     base-span-must-hit gate).  Number-leading starts are skipped
     entirely (the "no numbers hack", 2026, nulls every hit from such a
     start, bigram included).  ``max_span_words`` is the pure
-    word-count prune of :func:`find_mentions` (+1 for the stem retry's
+    word-count prune of :func:`find_mentions_trie` (+1 for the stem retry's
     possible 1-char-token collapse); pass
     :func:`max_alias_word_count`'s value or None.
 
@@ -809,7 +614,7 @@ def enumerate_probe_keys(
     the shuffle-join path: a probe whose key's first token fails can
     never survive the alias join, so it is dropped before emission —
     and for a SAFE first word (normalization compositional, the same
-    invariant :func:`find_mentions` exploits) the whole start is
+    invariant :func:`find_mentions_trie` exploits) the whole start is
     skipped when neither its normalized form nor its single-word stem
     form can pass, avoiding the span-join/normalize work entirely.
     Unsafe first words fall back to the exact per-probe check.  Pure
@@ -978,7 +783,7 @@ def oracle_triples(
         return None
 
     # NOTE: the oracle deliberately runs the NAIVE scan twins — the
-    # engine's optimized find_mentions/filter_candidates never touch
+    # engine's optimized find_mentions_trie/filter_candidates never touch
     # this path, so an optimization bug shows up as a P/R failure
     # instead of being masked by shared code.
     for doc in docs:

@@ -49,7 +49,10 @@ from netbase_spark.operators.canonicalize import (
 )
 from netbase_spark.operators.extraction import alias_instance_edges, dissect_triples
 from netbase_spark.operators.gazetteer import build_alias_table
-from netbase_spark.operators.mentions import scan_mention_triples_gated
+from netbase_spark.operators.mentions import (
+    prepare_construction_scan,
+    run_construction_scan,
+)
 from netbase_spark.operators.materialize import (
     adjacency_reverse,
     adjacency_view,
@@ -159,22 +162,24 @@ class Pipeline:
         # canonical rep composed into one broadcast dict; the doc side
         # runs as a single mapInPandas — no join, no shuffle, no dedup
         # exchange (per-doc distinct == global distinct, obj=doc_id).
-        # SIZE-GATED (plans/broadcast_gate): past the broadcast cap the
-        # gazetteer stays a partitioned DataFrame and the scan becomes a
-        # probe-key shuffle join (operators/mentions shuffle fallback) —
-        # the reference's fixed 2*maxNodes Ahash assumption
-        # (src/netbase.cpp:159-228) does not survive 10^8 aliases.
-        # The map builds INSIDE the stage lambda: it costs two collects +
-        # a window job, which a resumed run must not pay for a skipped
-        # stage.  The snapshot is written DIRECTLY in the final
+        # SIZE-GATED (mentions.prepare_construction_scan): past the
+        # broadcast cap the gazetteer stays a partitioned DataFrame and
+        # the scan becomes a probe-key shuffle join — the reference's
+        # fixed 2*maxNodes Ahash assumption (src/netbase.cpp:159-228)
+        # does not survive 10^8 aliases.
+        # The gate runs INSIDE the stage lambda: its collect job runs the
+        # alias->entity lineage, which a resumed run must not pay for a
+        # skipped stage.  The snapshot is written DIRECTLY in the final
         # rel-partitioned layout (the scan emits one rel, so the
         # dynamic-partition writer adds no work), which lets the triples
         # stage below publish these files into the canonical table by
         # hardlink instead of a full decode+re-encode pass.
         self._stage(
             "mention_triples",
-            lambda: scan_mention_triples_gated(
-                docs, scan_aliases, mapping, blacklist, german
+            lambda: run_construction_scan(
+                docs,
+                prepare_construction_scan(scan_aliases, mapping, blacklist),
+                german,
             ),
             write=write_triples,
         )

@@ -87,8 +87,8 @@ def build_artifacts(
     rules + synonym fixtures); the doc side emits MENTIONED_IN edges
     exclusively.  So candidate selection AND canonicalization both
     resolve before any document is read: compose alias -> rank-1
-    entity -> canonical rep into one broadcast map (size-gated via
-    plans/broadcast_gate: collect-and-broadcast under the cap,
+    entity -> canonical rep into one scan structure, size-gated by
+    mentions.prepare_construction_scan (broadcast under the cap,
     checkpointed DataFrame for the shuffle-join path above it).
 
     localCheckpoint, not persist: label-side tables are dimension-sized
@@ -111,9 +111,7 @@ def build_artifacts(
         dissect_triples,
     )
     from netbase_spark.operators.gazetteer import build_alias_table
-    from netbase_spark.operators.linking import alias_entity_table
-    from netbase_spark.operators.mentions import prepare_triple_scan
-    from netbase_spark.plans.broadcast_gate import collect_under_cap
+    from netbase_spark.operators.mentions import prepare_construction_scan
 
     if labels_df is None:
         labels_df = labels_spark_df(spark)
@@ -126,23 +124,10 @@ def build_artifacts(
     )
     mapping = connected_components(sameas_edges(label_side))
     label_triples = rewrite_triples(label_side, mapping).localCheckpoint()
-    blacklist = blacklist_fixture()
-    ae = alias_entity_table(aliases, mapping)
-    rows = collect_under_cap(ae, cap_bytes)
-    if rows is not None:
-        amap = {r["alias_key"]: r["entity"] for r in rows}
-        bc = prepare_triple_scan(spark, amap, blacklist)
-        return ConstructionArtifacts(label_triples, mapping, bc, None, blacklist)
-    # oversized gazetteer: keep the alias->entity table distributed;
-    # checkpoint so per-batch scans don't re-run the dimension lineage,
-    # and prepare the first-token probe pre-filter ONCE (mentions.
-    # first_token_hash_filter) so every batch's shuffle scan reuses it
-    ae = ae.localCheckpoint()
-    from netbase_spark.operators.mentions import first_token_hash_filter
-
+    scan = prepare_construction_scan(aliases, mapping, blacklist_fixture(), cap_bytes)
     return ConstructionArtifacts(
-        label_triples, mapping, None, ae, blacklist,
-        ft_bc=first_token_hash_filter(ae, "alias_key"),
+        label_triples, mapping, scan.scan_bc, scan.alias_entity, scan.blacklist,
+        ft_bc=scan.ft_bc,
     )
 
 
@@ -156,18 +141,8 @@ def construct_from(
     callers persist/count).  Pass prebuilt ``artifacts`` to amortize
     the dimension side across batches (micro-batch / incremental
     loops); without it the dimension side is built in-line."""
-    from netbase_spark.operators.mentions import (
-        scan_mention_triples_prepared,
-        scan_mention_triples_shuffle,
-    )
+    from netbase_spark.operators.mentions import run_construction_scan
 
     if artifacts is None:
         artifacts = build_artifacts(spark)
-    if artifacts.scan_bc is not None:
-        mention_triples = scan_mention_triples_prepared(docs, artifacts.scan_bc)
-    else:
-        mention_triples = scan_mention_triples_shuffle(
-            docs, artifacts.alias_entity, artifacts.blacklist,
-            ft_bc=artifacts.ft_bc,
-        )
-    return mention_triples.unionByName(artifacts.label_triples)
+    return run_construction_scan(docs, artifacts).unionByName(artifacts.label_triples)

@@ -306,9 +306,10 @@ def expire_versions(
     ``keep_future=False`` to reclaim that branch's disk.  A leftover
     ``_staging-*`` directory is removed only once its mtime is older
     than ``staging_grace_secs``: a fresh one is the normal state of an
-    IN-FLIGHT append/replace commit (the streaming loop runs expiry
-    between batches), and deleting it mid-write would crash or truncate
-    that commit.  Returns the deleted data file names."""
+    IN-FLIGHT append/replace commit by a concurrent caller (e.g. a
+    streaming micro-batch committing while expiry runs), and the grace
+    period keeps expiry from deleting it mid-write, which would crash or
+    truncate that commit.  Returns the deleted data file names."""
     import time
     cur = current_version(table)
     if cur is None:

@@ -1,7 +1,6 @@
 """Full KG construction as a Structured Streaming batch loop.
 
-``streaming/ingest.py`` streams the scan+link half (mention triples to
-an append sink).  This module runs the WHOLE construction —
+This module runs the WHOLE construction incrementally —
 fused scan -> link -> canonicalize against prebuilt dimension artifacts
 (plans/synth_pipeline.build_artifacts), then an idempotent merge into
 the canonical triple table — as a ``foreachBatch`` loop:
@@ -277,10 +276,7 @@ def start_incremental_construct(
     a near-full rewrite — measured, BENCH/compaction_probe.json).  The
     compaction commit is batch-id-idempotent like every commit here, so
     a replay after a crash cannot double-compact."""
-    from netbase_spark.operators.mentions import (
-        scan_mention_triples_prepared,
-        scan_mention_triples_shuffle,
-    )
+    from netbase_spark.operators.mentions import run_construction_scan
     from netbase_spark.plans import versioned as V
     from netbase_spark.plans.synth_pipeline import build_artifacts
 
@@ -304,13 +300,7 @@ def start_incremental_construct(
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
-        if artifacts.scan_bc is not None:
-            batch = scan_mention_triples_prepared(docs, artifacts.scan_bc)
-        else:
-            batch = scan_mention_triples_shuffle(
-                docs, artifacts.alias_entity, artifacts.blacklist,
-                ft_bc=artifacts.ft_bc,
-            )
+        batch = run_construction_scan(docs, artifacts)
         # fresh-keys-only append == the anti-join half of merge_triples
         # (first-writer provenance): idempotent under batch replay; the
         # batch's keys broadcast into a semi join, so the current table

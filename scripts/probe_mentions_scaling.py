@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Diagnose mentions-stage scaling: run detect_mentions alone over the
+"""Diagnose mentions-stage scaling: run detect_mentions_text alone over the
 pre-materialized corpus at a given core count (taskset-pinned by the
 caller), with event logging on, and print wall seconds + per-task
 duration stats so stragglers / floors are visible.
@@ -31,7 +31,7 @@ def main():
 
     from netbase_spark.data.fixtures import blacklist_fixture, labels_spark_df
     from netbase_spark.operators.gazetteer import alias_keys_local, build_alias_table
-    from netbase_spark.operators.mentions import detect_mentions
+    from netbase_spark.operators.mentions import detect_mentions_text, doc_text
     from netbase_spark.session import get_spark
 
     spark = get_spark(
@@ -52,8 +52,9 @@ def main():
     docs_df = spark.read.parquet(corpus)
 
     t0 = time.monotonic()
-    out = detect_mentions(
-        docs_df, alias_names, blacklist_fixture(), False, distinct_per_doc=True
+    out = detect_mentions_text(
+        doc_text(docs_df), alias_names, blacklist_fixture(), False,
+        distinct_per_doc=True,
     )
     out.write.mode("overwrite").parquet(f"/tmp/probe_mentions_out_{cores}")
     wall = time.monotonic() - t0

@@ -12,9 +12,8 @@ pre-filter (operators/mentions.first_token_hash_filter):
 - end-to-end scan wall seconds both ways, prepared-filter semantics
   (the batch-loop shape: build once, scan many).
 
-Alias/doc synthesis mirrors probe_gazetteer_scale.py's Zipf-ish shared
-token pool (WikiData labels share surname/place tokens heavily), but
-generated DISTRIBUTIVELY — 10^7 alias strings never sit in driver
+Alias/doc synthesis draws from a Zipf-ish shared token pool (WikiData
+labels share surname/place tokens heavily), generated DISTRIBUTIVELY — 10^7 alias strings never sit in driver
 memory, matching the oversized-gazetteer scenario this path exists for.
 
 Usage: python scripts/probe_shuffle_scan_scale.py [n_aliases ...]

@@ -161,27 +161,14 @@ def test_shuffle_scan_matches_broadcast_scan(spark, fixture_scan_inputs):
         got = sorted(map(tuple, got_df.collect()))
         assert got == want
         assert want, "fixture corpus produced no mentions — test is vacuous"
-        # and the probe automaton (broadcast twin) agrees with both
-        probe = sorted(
-            map(
-                tuple,
-                detect_mentions_text(
-                    texts, names, bl, distinct_per_doc=distinct,
-                    automaton="probe",
-                ).collect(),
-            )
-        )
-        assert probe == want
 
 
 def test_shuffle_triple_scan_matches_broadcast(spark, fixture_scan_inputs):
-    from netbase_spark.operators.linking import (
-        alias_canonical_map,
-        alias_entity_table,
-    )
+    """The prepared scan on both sides of the gate, with a non-trivial
+    canonical map: the shuffle join emits the broadcast scan's triples."""
     from netbase_spark.operators.mentions import (
-        scan_mention_triples,
-        scan_mention_triples_shuffle,
+        prepare_construction_scan,
+        run_construction_scan,
     )
 
     docs, _, aliases = fixture_scan_inputs
@@ -189,22 +176,11 @@ def test_shuffle_triple_scan_matches_broadcast(spark, fixture_scan_inputs):
         [("Q70", "Q7"), ("Q71", "Q7")], "node string, rep string"
     )
     bl = blacklist_fixture()
-    want = sorted(
-        map(
-            tuple,
-            scan_mention_triples(
-                docs, alias_canonical_map(aliases, mapping), bl
-            ).collect(),
-        )
-    )
-    got = sorted(
-        map(
-            tuple,
-            scan_mention_triples_shuffle(
-                docs, alias_entity_table(aliases, mapping), bl
-            ).collect(),
-        )
-    )
+    big = prepare_construction_scan(aliases, mapping, bl, cap_bytes=1 << 40)
+    small = prepare_construction_scan(aliases, mapping, bl, cap_bytes=1)
+    assert big.scan_bc is not None and small.alias_entity is not None
+    want = sorted(map(tuple, run_construction_scan(docs, big).collect()))
+    got = sorted(map(tuple, run_construction_scan(docs, small).collect()))
     assert got == want
     assert want, "fixture corpus produced no mention triples"
 
@@ -232,13 +208,20 @@ def test_gated_scan_forced_overflow(spark, fixture_scan_inputs):
     broadcast-dict plan; both emit identical triples, and the shuffle
     plan really is shuffle-side (no driver dict: its explain has a
     join, the broadcast one has none)."""
-    from netbase_spark.operators.mentions import scan_mention_triples_gated
+    from netbase_spark.operators.mentions import (
+        prepare_construction_scan,
+        run_construction_scan,
+    )
 
     docs, _, aliases = fixture_scan_inputs
     mapping = spark.createDataFrame([], "node string, rep string")
     bl = blacklist_fixture()
-    big = scan_mention_triples_gated(docs, aliases, mapping, bl, cap_bytes=1 << 40)
-    small = scan_mention_triples_gated(docs, aliases, mapping, bl, cap_bytes=1)
+    big = run_construction_scan(
+        docs, prepare_construction_scan(aliases, mapping, bl, cap_bytes=1 << 40)
+    )
+    small = run_construction_scan(
+        docs, prepare_construction_scan(aliases, mapping, bl, cap_bytes=1)
+    )
     assert "Join" not in big._jdf.queryExecution().executedPlan().toString()
     assert "Join" in small._jdf.queryExecution().executedPlan().toString()
     assert sorted(map(tuple, big.collect())) == sorted(map(tuple, small.collect()))

@@ -2,9 +2,10 @@
 
 from netbase_spark.normalize import norm_name, seo_slug
 from netbase_spark.oracle.rules import (
+    build_token_trie,
     dissect_name,
     filter_candidates,
-    find_mentions,
+    find_mentions_trie,
     oracle_triples,
 )
 from netbase_spark.relations import INSTANCE, LOCATION, MEMBER, MENTIONED_IN, NEAR
@@ -91,10 +92,9 @@ def test_number_rule_is_dead():
 def test_find_mentions_longest_match():
     aliases = {"battle of hastings", "battle", "hastings", "widget"}
 
-    def lookup(nn):
-        return nn if nn in aliases else None
-
-    found = find_mentions("the battle of hastings began", lookup, set())
+    found = find_mentions_trie(
+        "the battle of hastings began", build_token_trie(aliases), set()
+    )
     keys = {k for k, _, _ in found}
     assert "battle of hastings" in keys and "battle" in keys
     kept = {k for k, _, _ in filter_candidates(found)}
@@ -104,71 +104,9 @@ def test_find_mentions_longest_match():
 def test_find_mentions_stemming_blacklist_numbers():
     aliases = {"widget", "the"}
 
-    def lookup(nn):
-        return nn if nn in aliases else None
-
-    found = find_mentions("widgets 123 the", lookup, {"the"})
+    found = find_mentions_trie("widgets 123 the", build_token_trie(aliases), {"the"})
     keys = {k for k, _, _ in found}
     assert keys == {"widget"}  # plural stemmed; 123 numeric; "the" blacklisted
-
-
-def test_prefilter_never_rejects_apostrophe_stems():
-    # "Tesla's" with alias "tesla": the probe strips the raw last char
-    # then normalizes ("Tesla'" -> "tesla"); the prefilter must pass it.
-    from netbase_spark.oracle.rules import first_token_index
-
-    aliases = {"tesla"}
-
-    def lookup(nn):
-        return nn if nn in aliases else None
-
-    ftoks = first_token_index(aliases)
-    without = find_mentions("Tesla's factory opened", lookup, set())
-    withf = find_mentions(
-        "Tesla's factory opened", lookup, set(), first_tokens=ftoks
-    )
-    assert {k for k, _, _ in without} == {"tesla"}
-    assert without == withf
-
-
-def test_prefilter_equivalence_property():
-    # Property: find_mentions with the prefilter == without, over a
-    # generated mix of aliases/punctuation/stems/quotes.
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from netbase_spark.oracle.rules import first_token_index
-
-    aliases = {
-        "tesla", "red widget", "battle of hastings", "kiel", "new york",
-        "o'brien", '"quoted"', "cars",
-    }
-    ftoks = first_token_index(aliases)
-
-    def lookup(nn):
-        return nn if nn in aliases else None
-
-    tokens = st.sampled_from(
-        [
-            "Tesla's", "Tesla", "teslas", "red", "widgets", "widget",
-            "battle", "of", "hastings", "Kiel", "e.V", "new", "york",
-            "O'Briens", "o'brien", '"quoted"s', "cars'", "123", "", "the",
-            "(red)", "very",
-        ]
-    )
-
-    @settings(max_examples=200, deadline=None)
-    @given(st.lists(tokens, min_size=0, max_size=10))
-    def check(words):
-        text = " ".join(words)
-        for german in (False, True):
-            a = find_mentions(text, lookup, set(), german)
-            b = find_mentions(
-                text, lookup, set(), german, first_tokens=ftoks
-            )
-            assert a == b, (text, german)
-
-    check()
 
 
 def test_oracle_end_to_end_canonicalizes():
@@ -194,24 +132,21 @@ def test_oracle_end_to_end_canonicalizes():
 
 
 def test_optimized_scan_equals_naive_property():
-    # Property: the optimized find_mentions (memoized norms, incremental
-    # safe-span normalization, prefix-sum lengths, prefilter + word-count
-    # pruning) returns EXACTLY what the pristine transcription returns,
-    # over tokens engineered to hit every fast/slow boundary: quoted and
-    # underscored words (non-compositional normalization), 1-char "s"
-    # words (stem drops the separator too), non-ascii casing (final
-    # sigma), numbers, empties, blacklist hits, bigram probes.
+    # Property: the trie scan (memoized norms, incremental safe-span
+    # walk, dead-prefix break, word-count pruning) returns EXACTLY what
+    # the pristine transcription returns, over tokens engineered to hit
+    # every fast/slow boundary: quoted and underscored words
+    # (non-compositional normalization), 1-char "s" words (stem drops
+    # the separator too), non-ascii casing (final sigma), numbers,
+    # empties, blacklist hits, bigram probes.
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
     from netbase_spark.oracle.rules import (
         filter_candidates,
         filter_candidates_naive,
-        find_mentions,
         find_mentions_naive,
-        first_token_index,
         max_alias_word_count,
-        prefix2_index,
     )
 
     aliases = {
@@ -219,9 +154,8 @@ def test_optimized_scan_equals_naive_property():
         "o'brien", '"quoted"', "a s", "x", "ΑΣ".lower(), "tab word",
         "very long alias of six words", "battle of",
     }
-    ftoks = first_token_index(aliases)
+    trie = build_token_trie(aliases)
     maxw = max_alias_word_count(aliases)
-    pfx2 = prefix2_index(aliases)
     blacklist = {"the", "tab word"}
 
     def lookup(nn):
@@ -243,18 +177,12 @@ def test_optimized_scan_equals_naive_property():
         text = " ".join(words)
         for german in (False, True):
             naive = find_mentions_naive(text, lookup, blacklist, german)
-            fast = find_mentions(
-                text, lookup, blacklist, german,
-                first_tokens=ftoks, max_span_words=maxw,
-            )
+            fast = find_mentions_trie(text, trie, blacklist, german)
             assert fast == naive, (text, german)
-            # container form + all three prune indexes (the engine's
-            # actual hot path: direct `in` probes, prefix2 gate)
-            direct = find_mentions(
-                text, frozenset(aliases), blacklist, german,
-                first_tokens=ftoks, max_span_words=maxw, prefix2=pfx2,
+            pruned = find_mentions_trie(
+                text, trie, blacklist, german, max_span_words=maxw
             )
-            assert direct == naive, (text, german)
+            assert pruned == naive, (text, german)
             assert filter_candidates(fast) == filter_candidates_naive(naive), (
                 text, german,
             )

@@ -90,6 +90,50 @@ def test_resume_skips_stages(spark, built):
     assert got2 == got
 
 
+def test_pipeline_shuffle_branch_matches_broadcast(spark, built, tmp_path):
+    """Pipeline.run above the broadcast cap (the shuffle-join scan)
+    writes the same mention_triples stage and the same triple set as
+    the default-cap run in ``built``."""
+    import os
+
+    from netbase_spark.plans.broadcast_gate import CONF_KEY
+
+    out, got, _, _ = built
+    labels_df = spark.createDataFrame(
+        [(r["key"], r["label"], r["label_type"], r["lang"]) for r in labels_fixture()],
+        LABELS_SCHEMA,
+    )
+    syn_df = spark.createDataFrame(
+        [(s, r, o, "raw", None) for s, r, o in raw_synonym_edges()],
+        "subj string, rel int, obj string, rule string, doc_id string",
+    )
+    docs = docs_df(spark, N_DOCS, seed=42, partitions=8)
+    prev = spark.conf.get(CONF_KEY, None)
+    spark.conf.set(CONF_KEY, "1")
+    try:
+        out_small = str(tmp_path / "kg_small_cap")
+        triples = Pipeline(spark, out_small, resume=False).run(
+            docs, labels_df, blacklist_fixture(), raw_triples=syn_df
+        )
+        got_small = {(r.subj, r.rel, r.obj) for r in triples.collect()}
+    finally:
+        if prev is None:
+            spark.conf.unset(CONF_KEY)
+        else:
+            spark.conf.set(CONF_KEY, prev)
+    assert got_small == got
+
+    def stage(root):
+        df = spark.read.parquet(os.path.join(root, "mention_triples"))
+        return sorted(
+            map(tuple, df.select("subj", "rel", "obj", "rule", "doc_id").collect())
+        )
+
+    want = stage(out)
+    assert want, "fixture corpus produced no mention triples"
+    assert stage(out_small) == want
+
+
 def test_canonicalization_merged(built):
     _, got, _, _ = built
     merged_away = {k for pair in synonym_pairs() for k in pair} - {

@@ -101,5 +101,23 @@ def test_count_and_entity_linking(served):
     hits = [r for r in rows if r.get("alias_key") == "gehren"]
     assert hits and hits[0]["seo"] == "gehren"
     # bad console input surfaces as 400, not a hung 500
-    status, body = _get(f"{url}/q/:update%20broken", accept_status=400)
+    status, body = _get(f"{url}/q/:path%20onlyone", accept_status=400)
     assert status == 400 and "error" in json.loads(body)[0]
+    # a write command is refused before it is parsed
+    status, body = _get(f"{url}/q/:update%20broken", accept_status=403)
+    assert status == 403 and "error" in json.loads(body)[0]
+
+
+def test_q_refuses_write_commands(served, tmp_path):
+    """/q/ is read-only: a line that would change the served table or
+    write a server-side path gets 403 and is not executed."""
+    srv, url, _, t = served
+    before = json.loads(_get(f"{url}/count")[1])
+    status, body = _get(f"{url}/q/:learn%20gehren%20is%20a%20town", accept_status=403)
+    assert status == 403 and "error" in json.loads(body)[0]
+    assert json.loads(_get(f"{url}/count")[1]) == before
+    assert srv.console.triples is t
+    target = tmp_path / "x"
+    status, body = _get(f"{url}/q/:save%20{target}", accept_status=403)
+    assert status == 403 and "error" in json.loads(body)[0]
+    assert not target.exists()
